@@ -12,12 +12,17 @@ corpus needs.
 Architecture is idiomatic PySpark: the logical plan is declared with
 the DataFrame API and Catalyst/Tungsten pick the physical strategy.
 Custom logic (archive walking, magic sniffing, ascii-strings) lives in
-Arrow-batched mapInPandas at ingest; everything downstream is stock,
+Arrow-batched mapInArrow at ingest; everything downstream is stock,
 codegen-able DataFrame ops.
 """
 
+from archive_to_parquet_spark import zipimport_cache
 from archive_to_parquet_spark.options import ConvertOptions, IncludeType
 from archive_to_parquet_spark.schema import ENTRY_SCHEMA, FORMAT_KINDS
+
+# every Python worker that unpickles engine code imports this package,
+# so each one stops re-parsing pyspark.zip at the start of every task
+zipimport_cache.install()
 
 __version__ = "0.1.0"
 

@@ -7,6 +7,7 @@ parallelism at hand rather than the 200 default).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import zipfile
 
@@ -15,40 +16,50 @@ from pyspark.sql import SparkSession
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
+def package_zip(pkg_dir: str = _PKG_DIR, out_dir: str = "/tmp") -> str:
+    """Zip of ``pkg_dir``'s ``.py`` files, named by a digest of their
+    relative paths and bytes and built only when missing: two checkouts
+    with different code never share a zip, identical ones always do."""
+    parent = os.path.dirname(pkg_dir)
+    sources = sorted(
+        (os.path.relpath(os.path.join(root, f), parent), os.path.join(root, f))
+        for root, _, files in os.walk(pkg_dir)
+        for f in files
+        if f.endswith(".py")
+    )
+    h = hashlib.sha256()
+    for rel, full in sources:
+        with open(full, "rb") as fh:
+            data = fh.read()
+        h.update(f"{rel}\0{len(data)}\0".encode())
+        h.update(data)
+    name = os.path.basename(pkg_dir)
+    zip_path = os.path.join(out_dir, f"{name}_pkg-{h.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        # pid-unique staging name: concurrent drivers each rename their
+        # own finished zip into place instead of racing on one .tmp
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for rel, full in sources:
+                zf.write(full, rel)
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def ensure_package_shipped(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via ``addPyFile``.
 
-    Executors unpickle mapInPandas/pandas_udf closures by module name;
-    that import only works when the driver's cwd happens to be the repo
-    root. Shipping a zip makes the engine usable from any session and
-    any working directory (and, on a real cluster, any executor host).
-    Idempotent per session.
+    Executors unpickle mapInArrow/mapInPandas/pandas_udf closures by
+    module name; that import only works when the driver's cwd happens to
+    be the repo root. Shipping a zip makes the engine usable from any
+    session and any working directory (and, on a real cluster, any
+    executor host). Idempotent per session.
     """
     sc = spark.sparkContext
     flag = "_a2p_pkg_shipped"
     if getattr(sc, flag, False):
         return
-    zip_path = os.path.join("/tmp", "archive_to_parquet_spark_pkg.zip")
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < max(
-        os.path.getmtime(os.path.join(root, f))
-        for root, _, files in os.walk(_PKG_DIR)
-        for f in files
-        if f.endswith(".py")
-    ):
-        # pid-unique staging name: concurrent drivers (bench + audit in
-        # parallel) each rename their own finished zip into place
-        # instead of racing on one shared .tmp
-        tmp = f"{zip_path}.{os.getpid()}.tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for root, _, files in os.walk(_PKG_DIR):
-                for f in files:
-                    if not f.endswith(".py"):
-                        continue
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(_PKG_DIR))
-                    zf.write(full, rel)
-        os.replace(tmp, zip_path)
-    sc.addPyFile(zip_path)
+    sc.addPyFile(package_zip())
     setattr(sc, flag, True)
 
 

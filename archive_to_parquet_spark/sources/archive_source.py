@@ -65,6 +65,14 @@ def _rows_to_batch(
     )
 
 
+def _bin_inputs(bin_: list) -> list:
+    """The input leg's flatMap: one packed bin → its (path, is_url)
+    rows. Module-level, so it pickles by reference and the worker
+    imports this package (installing ``zipimport_cache``) before running
+    it, as the walker's worker does."""
+    return bin_
+
+
 def _make_walk_partition(options: ConvertOptions):
     """Build the mapInArrow function (options captured by value — the
     dataclass pickles into the task closure once, not per row).
@@ -167,7 +175,7 @@ def read_archives(
     bins = _pack_inputs(sorted(paths), n_tasks, urls=urls)
     rdd = spark.sparkContext.parallelize(
         [[(p, urls) for p in b] for b in bins], len(bins)
-    ).flatMap(lambda b: b)
+    ).flatMap(_bin_inputs)
     paths_df = spark.createDataFrame(
         rdd, "input_path string, is_url boolean"
     )

@@ -3,7 +3,7 @@
 Pure-Python streaming walk of (possibly compressed, possibly nested)
 archives, emitting one row per extracted file with a fused streaming
 SHA-256. This is the only genuinely non-relational component; it runs
-inside ``mapInPandas`` on executors (see ``archive_source.py``), one
+inside ``mapInArrow`` on executors (see ``archive_source.py``), one
 input archive per task, so the cluster parallelizes across inputs and
 everything downstream is stock DataFrame ops.
 
@@ -357,9 +357,9 @@ def _hashed_copy(stream) -> tuple[bytes, bytes, int]:
 def _hashed_meta(stream) -> tuple[bytes, bytes, int]:
     """Read to EOF with fused SHA-256 WITHOUT buffering the payload —
     the column-pruned ingest path (``options.columns`` excludes
-    ``content``): only the first PEEK_SIZE bytes are kept for format
-    refinement, so a manifest / hash-only-dedup scan never materializes
-    entry bytes beyond one 1 MiB copy buffer. Same truncation
+    ``content``): only the first PEEK_SIZE bytes are kept, so a
+    manifest / hash-only-dedup scan never materializes entry bytes
+    beyond one 1 MiB copy buffer. Same truncation
     tolerance as `_hashed_copy`."""
     hasher = hashlib.sha256()
     peek = b""
@@ -766,12 +766,7 @@ class Walker:
             # extract_strings rewrites executable payloads, so hash/size
             # depend on the full bytes even when content is pruned
             content, digest, size = _hashed_copy(decoded)
-            fmt = (
-                kind
-                if kind != "unknown"
-                else detect_format(content[:PEEK_SIZE], None)
-            )
-            if self.options.extract_strings and fmt == "executable":
+            if self.options.extract_strings and kind == "executable":
                 content = joined_ascii_strings(
                     content, self.options.min_string_len
                 )
@@ -780,10 +775,9 @@ class Walker:
             if not want_content:
                 content = None
         else:
-            # pruned path: fused hash over a bounded copy buffer; only
-            # the sniff peek is retained
-            peek, digest, size = _hashed_meta(decoded)
-            fmt = kind if kind != "unknown" else detect_format(peek, None)
+            # pruned path: fused hash over a bounded copy buffer; the
+            # format is the sniff's, so no payload byte is retained
+            _, digest, size = _hashed_meta(decoded)
             content = None
         row = EntryRow(
             source=self.source,
@@ -791,7 +785,7 @@ class Walker:
             size=size,
             hash=digest,
             content=content,
-            format=fmt,
+            format=kind,
         )
         out = self.visit_file_entry(row)
         if out is not None:

@@ -254,10 +254,11 @@ _EXEC_METRICS = os.environ.get("SPARK_GRAFT_BENCH_EXEC_METRICS") == "1"
 def _exec_ms_probe(spark):
     """Returns a callable `(min_stage_id) -> (max_stage_id, ms)` giving
     the completed-stage executorRunTime accumulated by stages with id >
-    min_stage_id (None when the UI is off). Keyed on stage ids — a
-    cumulative total goes BACKWARDS when the UI store evicts old stages
-    mid-sweep (measured: negative per-entry deltas on a 5000-stage
-    sweep), while new-stage sums only need the RECENT window."""
+    min_stage_id, or None when that read fails (the probe itself is None
+    when the UI is off). Keyed on stage ids — a cumulative total goes
+    BACKWARDS when the UI store evicts old stages mid-sweep (measured:
+    negative per-entry deltas on a 5000-stage sweep), while new-stage
+    sums only need the RECENT window."""
     import urllib.request
 
     try:
@@ -283,9 +284,22 @@ def _exec_ms_probe(spark):
                 ),
             )
         except Exception:
-            return (min_stage_id, -1)
+            return None
 
     return since
+
+
+def _bracketed_exec_ms(probe, run) -> int | None:
+    """executorRunTime of the stages ``run()`` completes, or None unless
+    the probe reads on both sides succeed: a failed pre-run read has no
+    stage mark, and summing from the start would credit the entry with
+    every retained stage."""
+    before = probe(-1)
+    run()
+    if before is None:
+        return None
+    after = probe(before[0])
+    return None if after is None else after[1]
 
 
 # Queries that exercise the distinct physical paths: scan+project+hash,
@@ -1034,10 +1048,10 @@ def _run_sweep(spark, qs, sf_dir: str, cpus: int, deadline: _Deadline) -> dict:
             if exec_probe is not None:
                 # one extra bracketed execution per entry (opt-in only:
                 # the flag changes sweep cost, never the timed numbers)
-                mark, _ = exec_probe(-1)
-                run_noop(qs[name](spark, sf_dir))
-                _, ms = exec_probe(mark)
-                if ms >= 0:
+                ms = _bracketed_exec_ms(
+                    exec_probe, lambda: run_noop(qs[name](spark, sf_dir))
+                )
+                if ms is not None:
                     exec_ms[name] = ms
             prev_pin = after
             entry_walls.append(time.time() - t_entry)

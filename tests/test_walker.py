@@ -581,3 +581,30 @@ def test_options_columns_validation():
             columns=("path",), include=IncludeType.TEXT
         ).validate()
     ConvertOptions(columns=("path", "hash")).validate()  # ok
+
+
+def test_leaf_format_comes_from_the_stream_sniff():
+    """A leaf's format is the sniff's verdict, in content mode and in
+    columns-pruned mode alike: an executable, a text member longer than
+    the sniff peek and one shorter than it."""
+    data = tar_archive(
+        {
+            "bin/tool": FAKE_ELF,
+            "notes.txt": b"plain words, nothing to sniff\n" * 20,
+            "tiny.txt": b"short\n",
+        }
+    )
+    expected = [
+        ("bin/tool", "executable"),
+        ("notes.txt", "unknown"),
+        ("tiny.txt", "unknown"),
+    ]
+    full = _walk_bytes("t.tar", data)
+    pruned = _walk_bytes(
+        "t.tar",
+        data,
+        ConvertOptions(columns=("source", "path", "size", "hash", "format")),
+    )
+    assert [(r.path, r.format) for r in full] == expected
+    assert [(r.path, r.format) for r in pruned] == expected
+    assert [(r.size, r.hash) for r in pruned] == [(r.size, r.hash) for r in full]
