@@ -16,6 +16,8 @@ from __future__ import annotations
 import enum
 from dataclasses import dataclass, field
 
+from archive_to_parquet_spark.schema import ENTRY_COLUMNS
+
 
 class IncludeType(str, enum.Enum):
     """Row type filter (reference src/sink.rs:13-21)."""
@@ -93,12 +95,11 @@ class ConvertOptions:
         if self.max_depth < 1:
             raise ValueError("max_depth must be >= 1")
         if self.columns is not None:
-            valid = ("source", "path", "size", "hash", "content", "format")
-            bad = [c for c in self.columns if c not in valid]
+            bad = [c for c in self.columns if c not in ENTRY_COLUMNS]
             if bad or not self.columns:
                 raise ValueError(
-                    f"columns must be a non-empty subset of {valid}; got "
-                    f"{self.columns!r}"
+                    f"columns must be a non-empty subset of {ENTRY_COLUMNS}; "
+                    f"got {self.columns!r}"
                 )
             if "content" not in self.columns and self.include != IncludeType.ALL:
                 raise ValueError(

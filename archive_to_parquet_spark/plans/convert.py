@@ -62,6 +62,26 @@ def entries_pipeline(
     return df
 
 
+def _write_counted(
+    df: DataFrame, output: str, options: ConvertOptions, name: str, mode: str
+) -> ConversionCounters:
+    """Sink ``df`` with the run's totals observed on the way out."""
+    obs = Observation(name)
+    df = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("output_rows"),
+        # size may be pruned from the projection (options.columns)
+        F.coalesce(
+            F.sum("size") if "size" in df.columns else F.lit(0), F.lit(0)
+        ).alias("output_bytes"),
+    )
+    write_parquet(df, output, options, mode=mode)
+    return ConversionCounters(
+        output_rows=int(obs.get["output_rows"]),
+        output_bytes=int(obs.get["output_bytes"]),
+    )
+
+
 def convert_incremental(
     spark: SparkSession,
     paths: list[str],
@@ -92,19 +112,11 @@ def convert_incremental(
     except AnalysisException:
         existing_hashes = None  # first batch: nothing to dedup against
     if existing_hashes is not None:
-        df = df.join(existing_hashes, "hash", "left_anti")
-    obs = Observation("incremental_counters")
-    df = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("output_rows"),
-        F.coalesce(F.sum("size"), F.lit(0)).alias("output_bytes"),
-    )
+        # the USING join moves hash first; keep every appended file's
+        # column order equal to the first batch's
+        df = df.join(existing_hashes, "hash", "left_anti").select(df.columns)
     # append mode; zero NEW rows is fine (everything already ingested)
-    write_parquet(df, output, options, mode="append")
-    return ConversionCounters(
-        output_rows=int(obs.get["output_rows"]),
-        output_bytes=int(obs.get["output_bytes"]),
-    )
+    return _write_counted(df, output, options, "incremental_counters", "append")
 
 
 def convert(
@@ -118,20 +130,7 @@ def convert(
     (reference src/main.rs:129-132)."""
     options = options or ConvertOptions()
     df = entries_pipeline(spark, paths, options, urls=urls)
-    obs = Observation("conversion_counters")
-    df = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("output_rows"),
-        # size may be pruned from the projection (options.columns)
-        F.coalesce(
-            F.sum("size") if "size" in df.columns else F.lit(0), F.lit(0)
-        ).alias("output_bytes"),
-    )
-    write_parquet(df, output, options)
-    counters = ConversionCounters(
-        output_rows=int(obs.get["output_rows"]),
-        output_bytes=int(obs.get["output_bytes"]),
-    )
+    counters = _write_counted(df, output, options, "conversion_counters", "overwrite")
     if counters.output_rows == 0:
         # the reference errors WITHOUT producing output (src/main.rs:129-132);
         # remove the empty dataset the sink just committed so a failed run

@@ -16,6 +16,8 @@ more queryable; the strict 5-column reference layout is a ``select`` away.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import types as T
 
 HASH_SIZE = 32  # SHA-256 output length (reference src/hasher.rs:3)
@@ -47,8 +49,32 @@ ENTRY_SCHEMA = T.StructType(
 # The byte-compatible reference projection (no format column).
 REFERENCE_COLUMNS = ("source", "path", "size", "hash", "content")
 
-# Arrow-side schema string for mapInPandas (must match ENTRY_SCHEMA).
-ENTRY_SCHEMA_DDL = (
-    "source string, path string, size long, hash binary, "
-    "content binary, format string"
-)
+# Every other spelling of the table derives from ENTRY_SCHEMA.
+ENTRY_COLUMNS = tuple(ENTRY_SCHEMA.fieldNames())
+
+
+def entry_columns(columns: tuple[str, ...] | None = None) -> tuple[str, ...]:
+    """``columns`` in canonical table order (all of them for None),
+    however the subset was spelled."""
+    return tuple(c for c in ENTRY_COLUMNS if columns is None or c in columns)
+
+
+def entry_ddl(columns: tuple[str, ...] | None = None) -> str:
+    """DDL of the (projected) table, the mapInArrow output schema. A DDL
+    string declares every column nullable, as Arrow batches are."""
+    return ", ".join(
+        f"{c} {ENTRY_SCHEMA[c].dataType.simpleString()}"
+        for c in entry_columns(columns)
+    )
+
+
+@functools.lru_cache(maxsize=None)  # keys: the 2^6 column subsets at most
+def entry_arrow_schema(columns: tuple[str, ...] | None = None):
+    """Arrow schema of the (projected) table, types from Spark's own
+    Spark → Arrow mapping (string / int64 / binary)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return pa.schema(
+        [(c, to_arrow_type(ENTRY_SCHEMA[c].dataType)) for c in entry_columns(columns)]
+    )

@@ -22,47 +22,67 @@ which is the reference's model too (threads = inputs in flight).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from archive_to_parquet_spark.options import ConvertOptions
-from archive_to_parquet_spark.schema import ENTRY_SCHEMA_DDL
+from archive_to_parquet_spark.schema import (
+    ENTRY_COLUMNS,
+    entry_arrow_schema,
+    entry_columns,
+    entry_ddl,
+)
 
 _BATCH_ROWS = 1024  # reference src/batch.rs:78
-
-# mirrors ENTRY_SCHEMA_DDL; the walker hands Arrow batches straight to
-# the JVM (mapInArrow) — no pandas object arrays in the hot path
-_PA_TYPES = {
-    "source": pa.string(),
-    "path": pa.string(),
-    "size": pa.int64(),
-    "hash": pa.binary(),
-    "content": pa.binary(),
-    "format": pa.string(),
-}
-_DDL_TYPES = {
-    "source": "string",
-    "path": "string",
-    "size": "long",
-    "hash": "binary",
-    "content": "binary",
-    "format": "string",
-}
-ENTRY_COLUMNS = tuple(_PA_TYPES)
 
 
 def _rows_to_batch(
     rows: list, columns: tuple[str, ...] = ENTRY_COLUMNS
 ) -> pa.RecordBatch:
+    schema = entry_arrow_schema(columns)
     return pa.RecordBatch.from_arrays(
-        [
-            pa.array([getattr(r, c) for r in rows], _PA_TYPES[c])
-            for c in columns
-        ],
-        schema=pa.schema([(c, _PA_TYPES[c]) for c in columns]),
+        [pa.array([getattr(r, f.name) for r in rows], f.type) for f in schema],
+        schema=schema,
     )
+
+
+def _walk_input(path: str, is_url: bool, options: ConvertOptions):
+    from archive_to_parquet_spark.sources.url_source import open_url
+    from archive_to_parquet_spark.sources.walker import walk_path, walk_stream
+
+    if not is_url:
+        yield from walk_path(path, options)
+        return
+    stream, size = open_url(path)
+    try:
+        yield from walk_stream(path, stream, size, options)
+    finally:
+        stream.close()
+
+
+def entry_batches(
+    inputs: Iterable[tuple[str, bool]], options: ConvertOptions
+) -> Iterator[pa.RecordBatch]:
+    """Walk each ``(path, is_url)`` input once, in order, and yield its
+    entries as Arrow RecordBatches in canonical column order. Each batch
+    is capped by rows AND bytes (the reference's dual cap); a batch may
+    span inputs. The walker's rows go straight into Arrow arrays — no
+    pandas object arrays in the hot path."""
+    columns = entry_columns(options.columns)
+    batch_bytes = options.batch_size
+    pending: list = []
+    pending_bytes = 0
+    for path, is_url in inputs:
+        for row in _walk_input(path, is_url, options):
+            pending.append(row)
+            pending_bytes += len(row.content or b"")
+            if len(pending) >= _BATCH_ROWS or pending_bytes >= batch_bytes:
+                yield _rows_to_batch(pending, columns)
+                pending, pending_bytes = [], 0
+    if pending:
+        yield _rows_to_batch(pending, columns)
 
 
 def _bin_inputs(bin_: list) -> list:
@@ -74,66 +94,26 @@ def _bin_inputs(bin_: list) -> list:
 
 
 def _make_walk_partition(options: ConvertOptions):
-    """Build the mapInArrow function (options captured by value — the
-    dataclass pickles into the task closure once, not per row).
+    """The mapInArrow function over ``(input_path, is_url)`` batches
+    (options captured by value — the dataclass pickles into the task
+    closure once, not per row).
 
     mapInArrow, not mapInPandas: entry content is opaque bytes, and the
     pandas leg (object arrays → per-batch Arrow re-conversion) only
-    added copies. The walker appends straight into Arrow builders;
-    each yielded RecordBatch is capped by rows AND bytes (the
-    reference's dual cap)."""
-
-    batch_bytes = options.batch_size
-    # canonical column order regardless of how the subset was spelled
-    columns = (
-        tuple(c for c in ENTRY_COLUMNS if c in options.columns)
-        if options.columns
-        else ENTRY_COLUMNS
-    )
+    added copies."""
 
     def walk_partition(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
-        from archive_to_parquet_spark.sources.url_source import open_url
-        from archive_to_parquet_spark.sources.walker import walk_path, walk_stream
-
-        pending: list = []
-        pending_bytes = 0
-        for rb in batches:
-            input_paths = rb.column("input_path").to_pylist()
-            is_url = (
-                rb.column("is_url").to_pylist()
-                if "is_url" in rb.schema.names
-                else [False] * rb.num_rows
+        inputs = (
+            pair
+            for rb in batches
+            for pair in zip(
+                rb.column("input_path").to_pylist(),
+                rb.column("is_url").to_pylist(),
             )
-            for input_path, from_url in zip(input_paths, is_url):
-                if from_url:
-                    stream, size = open_url(input_path)
-                    try:
-                        row_iter = walk_stream(input_path, stream, size, options)
-                        for row in row_iter:
-                            pending.append(row)
-                            pending_bytes += len(row.content or b"")
-                            if (
-                                len(pending) >= _BATCH_ROWS
-                                or pending_bytes >= batch_bytes
-                            ):
-                                yield _rows_to_batch(pending, columns)
-                                pending, pending_bytes = [], 0
-                    finally:
-                        stream.close()
-                else:
-                    for row in walk_path(input_path, options):
-                        pending.append(row)
-                        pending_bytes += len(row.content or b"")
-                        if (
-                            len(pending) >= _BATCH_ROWS
-                            or pending_bytes >= batch_bytes
-                        ):
-                            yield _rows_to_batch(pending, columns)
-                            pending, pending_bytes = [], 0
-        if pending:
-            yield _rows_to_batch(pending, columns)
+        )
+        yield from entry_batches(inputs, options)
 
     return walk_partition
 
@@ -179,15 +159,9 @@ def read_archives(
     paths_df = spark.createDataFrame(
         rdd, "input_path string, is_url boolean"
     )
-    if options.columns is None:
-        ddl = ENTRY_SCHEMA_DDL
-    else:
-        ddl = ", ".join(
-            f"{c} {_DDL_TYPES[c]}"
-            for c in ENTRY_COLUMNS
-            if c in options.columns
-        )
-    return paths_df.mapInArrow(_make_walk_partition(options), ddl)
+    return paths_df.mapInArrow(
+        _make_walk_partition(options), entry_ddl(options.columns)
+    )
 
 
 # stat-ing a manifest beyond this on the driver costs more than the

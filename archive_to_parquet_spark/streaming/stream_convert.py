@@ -5,45 +5,25 @@ The reference's execution already IS a bounded streaming pipeline
 (producer/consumer channel with backpressure, reference
 src/channel.rs:112-139); Structured Streaming generalizes it to
 unbounded arrival. New archive files landing in a watched directory
-become micro-batches; each batch runs the SAME batch pipeline
-(walk → filter → dedup-within-batch) via ``foreachBatch``, giving
-exactly-once parquet appends with checkpointed progress.
+become micro-batches; each batch runs the SAME batch plan as
+``convert`` (``entries_pipeline`` → ``write_parquet``) via
+``foreachBatch``, giving exactly-once parquet appends with checkpointed
+progress.
 
-Global ``--unique`` across the whole stream uses
-``dropDuplicates("hash")`` on the streaming DataFrame — state grows
-with distinct hashes; bound it with a watermark on arrival time when
-late re-delivery is impossible.
+``unique`` dedups WITHIN each micro-batch, not across the stream: a
+file arriving in a later batch may repeat a hash already written. Use
+``convert_incremental`` (anti-join against the output's hashes) when
+the whole output must stay unique.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from archive_to_parquet_spark.operators.filters import (
-    apply_include_filter,
-    apply_size_filter,
-)
 from archive_to_parquet_spark.options import ConvertOptions
-from archive_to_parquet_spark.schema import ENTRY_SCHEMA_DDL
-from archive_to_parquet_spark.sources.archive_source import _make_walk_partition
-
-
-def _entries_of_batch(batch_df: DataFrame, options: ConvertOptions) -> DataFrame:
-    # the file-stream source reports URIs (file:/...); the walker opens
-    # with local IO, so strip the local scheme (cluster deployments with
-    # hdfs:/s3: inputs should mount or fetch — see url_source for http)
-    paths_df = batch_df.select(
-        F.regexp_replace("path", r"^file:", "").alias("input_path"),
-        F.lit(False).alias("is_url"),
-    )
-    entries = paths_df.mapInArrow(
-        _make_walk_partition(options), ENTRY_SCHEMA_DDL
-    )
-    entries = apply_include_filter(entries, options.include)
-    entries = apply_size_filter(entries, options)
-    return entries
+from archive_to_parquet_spark.plans.convert import entries_pipeline
+from archive_to_parquet_spark.plans.sink import write_parquet
 
 
 def stream_convert(
@@ -57,6 +37,7 @@ def stream_convert(
     """Watch ``watch_dir`` for new archive files; append converted rows
     to ``output`` parquet. Returns the running StreamingQuery."""
     options = options or ConvertOptions()
+    options.validate()
 
     # file-stream source listing new files; we only need their paths —
     # the walker opens them itself (content never flows through the
@@ -70,12 +51,15 @@ def stream_convert(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        entries = _entries_of_batch(batch_df, options)
-        if options.unique:
-            entries = entries.dropDuplicates(["hash"])
-        entries.write.mode("append").option(
-            "compression", options.compression
-        ).parquet(output)
+        # the file-stream source reports URIs (file:/...); the walker
+        # opens with local IO, so strip the local scheme (cluster
+        # deployments with hdfs:/s3: inputs should mount or fetch — see
+        # url_source for http)
+        paths = [r.path.removeprefix("file:") for r in batch_df.collect()]
+        if not paths:
+            return
+        entries = entries_pipeline(batch_df.sparkSession, paths, options)
+        write_parquet(entries, output, options, mode="append")
 
     writer = (
         files.writeStream.foreachBatch(process_batch)

@@ -97,9 +97,7 @@ def test_format_archive_stream(registered, tmp_path):
 
 
 def test_format_archive_requires_paths(registered):
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="needs option 'paths'"):
         registered.read.format("archive").load().collect()
 
 
@@ -315,3 +313,47 @@ def test_format_archive_columns_preserves_extract_strings_hash(
     assert {(r.path, r.size, bytes(r.hash)) for r in pruned} == {
         (r.path, r.size, bytes(r.hash)) for r in full
     }
+
+
+@pytest.mark.parametrize(
+    "mode",
+    [
+        {},
+        {"columns": ("source", "path", "size", "hash", "format")},
+        {"extract_strings": True},
+    ],
+    ids=["full", "columns", "extract_strings"],
+)
+def test_format_archive_matches_read_archives(registered, archives, tmp_path, mode):
+    """Both ingest front doors return the same rows in every mode (an
+    executable rides along so extract_strings rewrites something)."""
+    from archive_to_parquet_spark.options import ConvertOptions
+    from archive_to_parquet_spark.sources.archive_source import read_archives
+
+    exe = tmp_path / "e.tar"
+    exe.write_bytes(
+        tar_archive({"prog": b"\x7fELF" + b"\x00" * 20 + b"a_long_ascii_run_here"})
+    )
+    paths = archives + [str(exe)]
+    reader = registered.read.format("archive").option("paths", ",".join(paths))
+    if "columns" in mode:
+        reader = reader.option("columns", ",".join(mode["columns"]))
+    if mode.get("extract_strings"):
+        reader = reader.option("extract_strings", "true")
+    via_format = reader.load()
+    via_source = read_archives(registered, paths, ConvertOptions(**mode))
+    assert via_format.columns == via_source.columns
+    assert sorted(map(tuple, via_format.collect())) == sorted(
+        map(tuple, via_source.collect())
+    )
+
+
+def test_format_archive_rejects_unknown_column(registered, archives):
+    with pytest.raises(Exception, match="sise"):
+        (
+            registered.read.format("archive")
+            .option("paths", ",".join(archives))
+            .option("columns", "sise")
+            .load()
+            .collect()
+        )

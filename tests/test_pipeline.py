@@ -130,6 +130,21 @@ def test_convert_incremental_skips_existing(spark, fixture_archives, tmp_path):
     assert "fresh.txt" in {r["path"] for r in table.to_pylist()}
 
 
+def test_convert_incremental_with_size_pruned(spark, fixture_archives, tmp_path):
+    """The counters must not reference a column the projection pruned."""
+    from archive_to_parquet_spark.plans.convert import convert_incremental
+
+    out = str(tmp_path / "inc_pruned.parquet")
+    opts = ConvertOptions(columns=("source", "path", "hash"))
+    c1 = convert_incremental(spark, fixture_archives[:1], out, opts)
+    assert c1.output_rows == 4
+    c2 = convert_incremental(spark, fixture_archives[:1], out, opts)
+    assert (c2.output_rows, c2.output_bytes) == (0, 0)
+    table = pq.read_table(out)
+    assert table.num_rows == 4
+    assert table.column_names == ["source", "path", "hash"]
+
+
 def test_observability_counters(spark, fixture_archives):
     from archive_to_parquet_spark.observability import observe_entries, stage_snapshot
 

@@ -193,18 +193,22 @@ def test_stateful_tws_declares_or_runs(spark, event_stream_dir):
         q.stop()
 
 
-def test_stream_convert_watches_directory(spark, tmp_path):
+def _stream_then_convert(spark, tmp_path, opts: dict):
+    """Stream one archive through stream_convert, convert() it with the
+    same options, and return both written tables."""
     from archive_to_parquet_spark.options import ConvertOptions
+    from archive_to_parquet_spark.plans.convert import convert
     from archive_to_parquet_spark.streaming.stream_convert import stream_convert
 
     watch = tmp_path / "incoming"
     watch.mkdir()
-    (watch / "a.tar").write_bytes(
+    archive = watch / "a.tar"
+    archive.write_bytes(
         tar_archive({"f1.txt": b"stream me", "f2.txt": b"stream me too"})
     )
     out = str(tmp_path / "out_parquet")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_convert(spark, str(watch), out, ckpt, ConvertOptions())
+    q = stream_convert(spark, str(watch), out, ckpt, ConvertOptions(**opts))
     try:
         # availableNow trigger: drains existing files then stops
         deadline = time.time() + 120
@@ -213,10 +217,33 @@ def test_stream_convert_watches_directory(spark, tmp_path):
     finally:
         if q.isActive:
             q.stop()
-    table = pq.read_table(out)
+    batch_out = str(tmp_path / "batch_parquet")
+    convert(spark, [str(archive)], batch_out, ConvertOptions(**opts))
+    return pq.read_table(out), pq.read_table(batch_out)
+
+
+def _assert_same_table(streamed, batch) -> None:
+    assert streamed.column_names == batch.column_names
+    rows = lambda t: sorted(tuple(r.values()) for r in t.to_pylist())  # noqa: E731
+    assert rows(streamed) == rows(batch)
+
+
+def test_stream_convert_watches_directory(spark, tmp_path):
+    table, batch = _stream_then_convert(spark, tmp_path, {})
     assert sorted(r["path"] for r in table.to_pylist()) == ["f1.txt", "f2.txt"]
     contents = {r["path"]: r["content"] for r in table.to_pylist()}
     assert contents["f1.txt"] == b"stream me"
+    _assert_same_table(table, batch)
+
+
+@pytest.mark.parametrize(
+    "opts",
+    [{"columns": ("source", "path", "size", "hash")}, {"emit_format_column": False}],
+    ids=["columns", "no_format"],
+)
+def test_stream_convert_honours_options(spark, tmp_path, opts):
+    """The stream writes what convert() writes for the same options."""
+    _assert_same_table(*_stream_then_convert(spark, tmp_path, opts))
 
 
 def test_interval_join_stream_pairs(spark, tmp_path):
