@@ -72,7 +72,7 @@ _EXECUTABLE_PREFIXES = (
 
 
 def is_executable_magic(peek: bytes) -> bool:
-    return any(peek.startswith(m) for m in _EXECUTABLE_PREFIXES)
+    return peek.startswith(_EXECUTABLE_PREFIXES)
 
 
 def _is_tar(peek: bytes) -> bool:

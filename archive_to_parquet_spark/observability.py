@@ -39,7 +39,9 @@ def observe_entries(df: DataFrame, name: str = "entry_counters"):
         obs,
         F.count(F.lit(1)).alias("entries_read"),
         F.coalesce(F.sum("size"), F.lit(0)).alias("entries_read_bytes"),
-        F.approx_count_distinct("source").alias("distinct_sources"),
+        # exact: at most one string per input archive; observe() rejects
+        # count_distinct, and approx_count_distinct can merge two paths
+        F.size(F.collect_set("source")).alias("distinct_sources"),
         F.coalesce(
             F.sum(F.when(F.is_valid_utf8("content"), 1).otherwise(0)), F.lit(0)
         ).alias("text_entries"),

@@ -3,9 +3,11 @@
 Mapping of the reference's physical layer (SURVEY.md §2.7) onto Spark:
 
 - per-input worker fan-out (rayon pool, one walk per input —
-  reference src/converter/base.rs:45-66) → ``repartition(n_inputs)``
-  so each task walks one input; a 1000-executor cluster walks 1000
-  archives concurrently with zero coordination.
+  reference src/converter/base.rs:45-66) → the driver packs the inputs
+  into ``min(len(paths), threads * 4)`` size-weighted (LPT) bins and
+  ``parallelize``s one bin per task, with no repartition; each task
+  walks its bin's inputs in turn, and a 1000-executor cluster walks
+  1000 bins concurrently with zero coordination.
 - bounded batch channel with backpressure (reference
   src/channel.rs:112-139) → the ``mapInArrow`` iterator protocol:
   each yielded Arrow RecordBatch is capped by rows AND bytes (the
@@ -125,7 +127,7 @@ def read_archives(
     urls: bool = False,
 ) -> DataFrame:
     """Entries DataFrame from local archive paths (or URLs with
-    ``urls=True``). One Spark task per input.
+    ``urls=True``). One Spark task per bin of inputs (``_pack_inputs``).
 
     ``options.columns`` prunes the output projection INSIDE the walker:
     with ``content`` excluded, entry payloads are stream-hashed but

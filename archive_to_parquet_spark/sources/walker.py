@@ -3,9 +3,9 @@
 Pure-Python streaming walk of (possibly compressed, possibly nested)
 archives, emitting one row per extracted file with a fused streaming
 SHA-256. This is the only genuinely non-relational component; it runs
-inside ``mapInArrow`` on executors (see ``archive_source.py``), one
-input archive per task, so the cluster parallelizes across inputs and
-everything downstream is stock DataFrame ops.
+inside ``mapInArrow`` on executors (see ``archive_source.py``), each
+task walking one bin of inputs, so the cluster parallelizes across
+inputs and everything downstream is stock DataFrame ops.
 
 Reference semantics preserved (file:line into /root/reference/):
 
@@ -93,7 +93,7 @@ _ZSTD_BIN = _find_zstd_bin()
 
 # content-copy chunk size. The reference copies in 8 KiB chunks
 # (src/batch.rs:42) — cheap in Rust, but every .read() call here is a
-# Python-level round-trip through the decoder adapter stack, so larger
+# Python-level round-trip through the level readers, so larger
 # chunks win: measured 257 → 368 MB/s single-thread tar walk moving
 # 8 KiB → 64 KiB (256 KiB adds ~1%, not worth the extra buffer memory
 # per concurrent walk task).
@@ -121,7 +121,7 @@ class _StackFrame:
     size: int
 
 
-def _wrap_decoder(stream: io.BufferedReader, kind: str):
+def _wrap_decoder(stream: _Reader, kind: str):
     if kind == "gzip":
         return gzip.GzipFile(fileobj=stream)
     if kind == "bzip2":
@@ -145,7 +145,7 @@ def _wrap_decoder(stream: io.BufferedReader, kind: str):
 class ZstdDecodeError(Exception):
     """Corrupt zstd input detected by the subprocess decoder — the twin
     of ``zstandard.ZstdError`` from the in-process path, and like it NOT
-    absorbed by ``_RawAdapter``'s truncation catch list: genuinely bad
+    absorbed by ``_Reader``'s truncation catch list: genuinely bad
     zstd fails the walk loudly in both decode paths."""
 
 
@@ -244,137 +244,125 @@ class _SubprocessZstdReader:
             pass
 
 
-def sniff_stream(stream) -> tuple[str, io.BufferedReader]:
-    """Two-stage sniff. Returns (format_kind, readable stream positioned
-    at the logical start of the decompressed data).
+def sniff_stream(stream) -> tuple[str, _Reader]:
+    """Two-stage sniff. Returns (format_kind, the level's reader
+    positioned at the logical start of the decompressed data).
 
-    Peeks use exact-read loops + prefix push-back rather than
-    ``BufferedReader.peek`` — peek performs a single raw read and may
-    return fewer than the requested bytes on short-read streams, which
-    made tar detection (magic at offset 257) silently fail."""
-    tolerant = io.BufferedReader(_as_raw(stream))
-    head = _read_exact(tolerant, 6)
-    rewound = io.BufferedReader(_RawAdapter(tolerant, prefix=head))
+    One ``peek(PEEK_SIZE)`` serves both the 6-byte compression sniff and
+    the 262-byte container sniff; a compressed level is one decoder
+    between two readers. A ``_Reader`` passed in is the level's reader
+    already and is not wrapped again."""
+    reader = stream if isinstance(stream, _Reader) else _Reader(stream)
+    head = reader.peek(PEEK_SIZE)
     compression = detect_compression(head)
     if compression is not None:
-        decoder = _wrap_decoder(rewound, compression)
-        decoded_tolerant = io.BufferedReader(_RawAdapter(decoder))
-        inner = _read_exact(decoded_tolerant, PEEK_SIZE)
-        decoded = io.BufferedReader(_RawAdapter(decoded_tolerant, prefix=inner))
-        return detect_format(inner, compression), decoded
-    peek = _read_exact(rewound, PEEK_SIZE)
-    out = io.BufferedReader(_RawAdapter(rewound, prefix=peek))
-    return detect_format(peek, None), out
+        reader = _Reader(_wrap_decoder(reader, compression))
+        head = reader.peek(PEEK_SIZE)
+    return detect_format(head, compression), reader
 
 
-class _RawAdapter(io.RawIOBase):
-    """Adapt any .read()-able object to RawIOBase for BufferedReader,
-    optionally serving a pushed-back prefix first.
+# decoder/container errors that mean "the input ends here": zipfile
+# raises BadZipFile on a CRC mismatch while READING a member, outside
+# _walk_zip_spool's zf.open guard
+_TRUNCATED = (
+    OSError,
+    EOFError,
+    zlib.error,
+    lzma.LZMAError,
+    zipfile.BadZipFile,
+    tarfile.ReadError,
+)
+
+
+class _Reader:
+    """The one reader of an archive level: a pushback buffer over any
+    ``.read()``-able stream.
+
+    - ``peek(n)`` fills the buffer with an exact-read loop without
+      consuming it. A single ``.read(n)`` may return fewer bytes on
+      short-read streams (HTTP bodies, zstd stream_reader), which would
+      make tar detection (magic at offset 257) silently fail.
+    - ``read(n)`` serves the buffer first, then the inner stream, and
+      returns fewer than ``n`` bytes only at EOF.
+    - ``push(data)`` puts over-read bytes back (the streaming zip walk).
 
     Decoder/container errors (truncated gzip/bz2/xz streams, CRC
-    failures, bad zip members) are converted to EOF so
-    partially-readable content is emitted as-is — the reference's
-    ``infallable_copy`` contract (src/batch.rs:41-59). This sits below
-    BOTH the sniffing peek and the content copy, so a stream cut or a
-    corrupt member anywhere yields a truncated row, never a crash.
+    failures, bad zip members) become EOF, so partially-readable content
+    is emitted as-is — the reference's ``infallable_copy`` contract
+    (src/batch.rs:41-59). Every sniff and content copy reads through a
+    level's reader, so a stream cut or a corrupt member anywhere yields a
+    truncated row, never a crash.
     """
 
-    def __init__(self, inner, prefix: bytes = b""):
+    __slots__ = ("_inner", "_buf", "_eof")
+
+    def __init__(self, inner):
         self._inner = inner
-        self._prefix = prefix
-        self._failed = False
+        self._buf = b""
+        self._eof = False
 
-    def readable(self) -> bool:
-        return True
+    def _read_inner(self, n: int) -> bytes:
+        chunks: list[bytes] = []
+        while n > 0 and not self._eof:
+            try:
+                data = self._inner.read(n)
+            except _TRUNCATED:
+                data = b""
+            if not data:
+                self._eof = True
+                break
+            chunks.append(data)
+            n -= len(data)
+        return b"".join(chunks)
 
-    def readinto(self, b) -> int:
-        if self._prefix:
-            n = min(len(b), len(self._prefix))
-            b[:n] = self._prefix[:n]
-            self._prefix = self._prefix[n:]
-            return n
-        if self._failed:
-            return 0
-        try:
-            data = self._inner.read(len(b))
-        except (
-            OSError,
-            EOFError,
-            zlib.error,
-            lzma.LZMAError,
-            zipfile.BadZipFile,
-            tarfile.ReadError,
-        ):
-            # note: zipfile raises BadZipFile on a CRC mismatch while
-            # READING a member — reachable from the sniff peek, outside
-            # _walk_zip's zf.open guard
-            self._failed = True
-            return 0
-        if not data:
-            return 0
-        b[: len(data)] = data
-        return len(data)
+    def peek(self, n: int) -> bytes:
+        if len(self._buf) < n:
+            self._buf += self._read_inner(n - len(self._buf))
+        return self._buf[:n]
 
+    def read(self, n: int) -> bytes:
+        buf = self._buf
+        if len(buf) < n:
+            self._buf = b""
+            return buf + self._read_inner(n - len(buf))
+        if n <= 0:  # a negative header length reads nothing
+            return b""
+        self._buf = buf[n:]
+        return buf[:n]
 
-def _read_exact(stream, n: int) -> bytes:
-    """Read exactly n bytes unless EOF — a single .read(n) may return
-    fewer on short-read streams (HTTP bodies, zstd stream_reader), which
-    previously made 262-byte container sniffing silently misdetect."""
-    chunks: list[bytes] = []
-    got = 0
-    while got < n:
-        data = stream.read(n - got)
-        if not data:
-            break
-        chunks.append(data)
-        got += len(data)
-    return b"".join(chunks)
+    def push(self, data: bytes) -> None:
+        self._buf = data + self._buf
 
 
-def _as_raw(obj) -> io.RawIOBase:
-    return obj if isinstance(obj, io.RawIOBase) else _RawAdapter(obj)
-
-
-def _hashed_copy(stream) -> tuple[bytes, bytes, int]:
-    """Read to EOF with fused SHA-256; on mid-read errors return bytes
-    copied so far (reference infallable_copy, src/batch.rs:41-59)."""
+def _hashed_copy(stream: _Reader) -> tuple[bytes, bytes, int]:
+    """Read to EOF with fused SHA-256. The reader turns mid-read errors
+    into EOF, so a truncated stream yields the bytes copied so far
+    (reference infallable_copy, src/batch.rs:41-59)."""
     hasher = hashlib.sha256()
     chunks: list[bytes] = []
     total = 0
-    try:
-        while True:
-            chunk = stream.read(_COPY_BUF)
-            if not chunk:
-                break
-            hasher.update(chunk)
-            chunks.append(chunk)
-            total += len(chunk)
-    except (OSError, EOFError, lzma.LZMAError, zipfile.BadZipFile, tarfile.ReadError):
-        pass  # truncated content is emitted as-is
+    while chunk := stream.read(_COPY_BUF):
+        hasher.update(chunk)
+        chunks.append(chunk)
+        total += len(chunk)
     return b"".join(chunks), hasher.digest(), total
 
 
-def _hashed_meta(stream) -> tuple[bytes, bytes, int]:
+def _hashed_meta(stream: _Reader) -> tuple[bytes, bytes, int]:
     """Read to EOF with fused SHA-256 WITHOUT buffering the payload —
     the column-pruned ingest path (``options.columns`` excludes
     ``content``): only the first PEEK_SIZE bytes are kept, so a
     manifest / hash-only-dedup scan never materializes entry bytes
-    beyond one 1 MiB copy buffer. Same truncation
+    beyond one 64 KiB copy buffer. Same truncation
     tolerance as `_hashed_copy`."""
     hasher = hashlib.sha256()
     peek = b""
     total = 0
-    try:
-        while True:
-            chunk = stream.read(_COPY_BUF)
-            if not chunk:
-                break
-            hasher.update(chunk)
-            if len(peek) < PEEK_SIZE:
-                peek += chunk[: PEEK_SIZE - len(peek)]
-            total += len(chunk)
-    except (OSError, EOFError, lzma.LZMAError, zipfile.BadZipFile, tarfile.ReadError):
-        pass
+    while chunk := stream.read(_COPY_BUF):
+        hasher.update(chunk)
+        if len(peek) < PEEK_SIZE:
+            peek += chunk[: PEEK_SIZE - len(peek)]
+        total += len(chunk)
     return peek, hasher.digest(), total
 
 
@@ -522,43 +510,7 @@ def _http_body(message: bytes) -> bytes:
 # -- streaming-zip machinery ---------------------------------------------------
 
 
-class _PushbackStream:
-    """Sequential reader with a pushback buffer (for bytes the deflate
-    scanner over-read past a member's end)."""
-
-    __slots__ = ("_inner", "_buf")
-
-    def __init__(self, inner):
-        self._inner = inner
-        self._buf = b""
-
-    def read(self, n: int) -> bytes:
-        out: list[bytes] = []
-        got = 0
-        while got < n:
-            if self._buf:
-                take = self._buf[: n - got]
-                self._buf = self._buf[len(take):]
-                out.append(take)
-                got += len(take)
-                continue
-            data = self._inner.read(n - got)
-            if not data:
-                break
-            out.append(data)
-            got += len(data)
-        return b"".join(out)
-
-    def push(self, data: bytes) -> None:
-        if data:
-            self._buf = data + self._buf
-
-    def drain_pushback(self) -> bytes:
-        buf, self._buf = self._buf, b""
-        return buf
-
-
-def _skip_bytes(s: _PushbackStream, n: int) -> bool:
+def _skip_bytes(s: _Reader, n: int) -> bool:
     left = n
     while left > 0:
         d = s.read(min(65536, left))
@@ -568,7 +520,7 @@ def _skip_bytes(s: _PushbackStream, n: int) -> bool:
     return True
 
 
-def _consume_descriptor(s: _PushbackStream, zip64: bool) -> None:
+def _consume_descriptor(s: _Reader, zip64: bool) -> None:
     """Consume a data descriptor: optional PK\\x07\\x08 signature, then
     crc + compressed size + uncompressed size (8-byte sizes if zip64)."""
     body_len = 16 if zip64 else 12
@@ -583,13 +535,11 @@ class _BoundedReader:
     """Exactly ``size`` bytes of a STORED member from the sequential
     stream."""
 
-    def __init__(self, s: _PushbackStream, size: int):
+    def __init__(self, s: _Reader, size: int):
         self._s = s
         self._left = size
 
-    def read(self, n: int = -1) -> bytes:
-        if n is None or n < 0:
-            n = self._left
+    def read(self, n: int) -> bytes:
         if self._left <= 0 or n <= 0:
             return b""
         data = self._s.read(min(n, self._left))
@@ -607,7 +557,7 @@ class _BoundedReader:
 class _DeflateReader:
     """Streaming inflate of a member with KNOWN compressed size."""
 
-    def __init__(self, s: _PushbackStream, csize: int):
+    def __init__(self, s: _Reader, csize: int):
         self._s = s
         self._left = csize
         self._z = zlib.decompressobj(-15)
@@ -649,7 +599,7 @@ class _DeflateDescReader:
     bytes it over-read (``unused_data``) are pushed back for the next
     header parse."""
 
-    def __init__(self, s: _PushbackStream):
+    def __init__(self, s: _Reader):
         self._s = s
         self._z = zlib.decompressobj(-15)
         self._buf = bytearray()
@@ -826,11 +776,11 @@ class Walker:
         ``#1/N`` names are read from the data prefix; the ``/`` symbol
         table is skipped. Stops silently at the first malformed header
         (tar stop-at-first-bad-entry contract)."""
-        if _read_exact(stream, 8) != b"!<arch>\n":
+        if stream.read(8) != b"!<arch>\n":
             return
         gnu_names: dict[int, str] = {}
         while True:
-            hdr = _read_exact(stream, 60)
+            hdr = stream.read(60)
             if len(hdr) < 60 or hdr[58:60] != b"\x60\n":
                 return
             try:
@@ -840,8 +790,8 @@ class Walker:
                 return
             pad = size % 2
             if raw_name == "//":  # GNU extended-name table
-                table = _read_exact(stream, size)
-                _read_exact(stream, pad)
+                table = stream.read(size)
+                stream.read(pad)
                 off = 0
                 for line in table.split(b"\n"):
                     entry = line.decode("ascii", "replace").rstrip("/\r")
@@ -850,8 +800,8 @@ class Walker:
                     off += len(line) + 1
                 continue
             if raw_name == "/":  # symbol table
-                _read_exact(stream, size)
-                _read_exact(stream, pad)
+                stream.read(size)
+                stream.read(pad)
                 continue
             name = raw_name
             body = _BoundedReader(stream, size)
@@ -861,7 +811,7 @@ class Walker:
                 except ValueError:
                     return
                 name = (
-                    _read_exact(body, nlen).decode("utf-8", "replace").rstrip("\x00")
+                    body.read(nlen).decode("utf-8", "replace").rstrip("\x00")
                 )
             elif raw_name.startswith("/") and raw_name[1:].isdigit():
                 name = gnu_names.get(int(raw_name[1:]), raw_name)
@@ -870,7 +820,7 @@ class Walker:
             if size > 0:
                 yield from self.walk(name, body, size)
             body.drain()
-            _read_exact(stream, pad)
+            stream.read(pad)
 
     def _walk_cpio(self, stream) -> Iterator[EntryRow]:
         """Streaming cpio walk, newc/crc variants (``070701``/``070702``
@@ -880,7 +830,7 @@ class Walker:
         empty members are skipped (tar skip-predicate parity); a
         malformed header stops the walk silently."""
         while True:
-            hdr = _read_exact(stream, 110)
+            hdr = stream.read(110)
             if len(hdr) < 110 or hdr[:6] not in (b"070701", b"070702"):
                 return
             try:
@@ -890,8 +840,8 @@ class Walker:
             except ValueError:
                 return
             mode, filesize, namesize = fields[1], fields[6], fields[11]
-            raw_name = _read_exact(stream, namesize)
-            _read_exact(stream, (-(110 + namesize)) % 4)
+            raw_name = stream.read(namesize)
+            stream.read((-(110 + namesize)) % 4)
             name = raw_name.decode("utf-8", "replace").rstrip("\x00")
             if name == "TRAILER!!!":
                 return
@@ -900,7 +850,7 @@ class Walker:
             if is_regular and filesize > 0:
                 yield from self.walk(name, body, filesize)
             body.drain()
-            _read_exact(stream, (-filesize) % 4)
+            stream.read((-filesize) % 4)
 
     def _walk_warc(self, stream) -> Iterator[EntryRow]:
         """Streaming WARC walk (ISO 28500 — Common Crawl's capture
@@ -939,7 +889,7 @@ class Walker:
                 length = int(headers.get("content-length", ""))
             except ValueError:
                 return
-            payload = _read_exact(stream, length)
+            payload = stream.read(length)
             if len(payload) < length:
                 return  # truncated record: stop silently
             n_records += 1
@@ -956,7 +906,7 @@ class Walker:
                 continue  # empty-member skip predicate
             yield from self.walk(name, io.BytesIO(payload), len(payload))
 
-    def _walk_zip(self, stream) -> Iterator[EntryRow]:
+    def _walk_zip(self, s: _Reader) -> Iterator[EntryRow]:
         """TRUE streaming zip walk: sequential local-file-header parse
         (PK\\x03\\x04 records, no central directory — reference
         read_zipfile_from_stream, walkers/zipfile.rs:21-32). Stored and
@@ -976,7 +926,6 @@ class Walker:
         Skip predicate parity (zipfile.rs:23): directories and empty
         members are skipped — for descriptor members (size unknown
         upfront) via a one-byte decompressed peek."""
-        s = _PushbackStream(stream)
         emitted_any = False
         while True:
             sig = s.read(4)
@@ -1014,8 +963,8 @@ class Walker:
                 if emitted_any:
                     return  # stop silently (zipfile.rs:22)
                 self.zip_spool_fallbacks += 1
-                prefix = sig + hdr + raw_name + extra + s.drain_pushback()
-                yield from self._walk_zip_spool(stream, prefix=prefix)
+                s.push(sig + hdr + raw_name + extra)
+                yield from self._walk_zip_spool(s)
                 return
             is_dir = name.endswith("/")
             if not has_desc:
@@ -1036,25 +985,23 @@ class Walker:
                 # end; leftover compressed-side bytes are pushed back for
                 # the next header parse
                 reader = _DeflateDescReader(s)
-                first = reader.read(1)
-                if is_dir or not first:
+                body = _Reader(reader)
+                if is_dir or not body.peek(1):
                     reader.drain()
                     _consume_descriptor(s, zip64)
                     continue
-                yield from self.walk(name, _RawAdapter(reader, prefix=first), usize)
+                yield from self.walk(name, body, usize)
                 emitted_any = True
                 reader.drain()
                 _consume_descriptor(s, zip64)
 
-    def _walk_zip_spool(self, stream, prefix: bytes = b"") -> Iterator[EntryRow]:
+    def _walk_zip_spool(self, stream: _Reader) -> Iterator[EntryRow]:
         """Fallback zip path: spool the whole archive (memory below
         _SPOOL_MAX, disk above) and read via zipfile with its central
-        directory. ``prefix`` restores bytes the streaming parser already
-        consumed so central-directory offsets stay valid."""
+        directory. The streaming parser pushed the bytes it consumed back
+        onto ``stream``, so central-directory offsets stay valid."""
         spool = tempfile.SpooledTemporaryFile(max_size=_SPOOL_MAX)
         try:
-            if prefix:
-                spool.write(prefix)
             while True:
                 chunk = stream.read(_COPY_BUF)
                 if not chunk:

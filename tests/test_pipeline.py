@@ -160,6 +160,22 @@ def test_observability_counters(spark, fixture_archives):
     assert snap.failed_tasks == 0
 
 
+def test_observed_distinct_sources_is_exact(spark):
+    # two fixture paths under the pytest-21 base temp dir that land in one
+    # HyperLogLog register: approx_count_distinct counts them as 1
+    from archive_to_parquet_spark.observability import observe_entries
+    from archive_to_parquet_spark.schema import ENTRY_SCHEMA
+
+    base = "/tmp/pytest-of-root/pytest-21/test_observability_counters0"
+    rows = [
+        (f"{base}/{name}", "m.txt", 1, b"\x00" * 32, b"x", "unknown")
+        for name in ("nested.tar", "wrapped.tar.gz")
+    ]
+    observed, resolve = observe_entries(spark.createDataFrame(rows, ENTRY_SCHEMA))
+    assert observed.count() == 2
+    assert resolve().distinct_sources == 2
+
+
 def test_deterministic_dedup_winner(spark, fixture_archives):
     df = entries_pipeline(
         spark,

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import hashlib
 import io
+import zipfile
+
+import pytest
 
 from archive_to_parquet_spark.options import ConvertOptions
 from archive_to_parquet_spark.sources.walker import walk_stream
@@ -226,17 +229,48 @@ class _ShortReadStream(io.RawIOBase):
         return len(data)
 
 
-def test_short_read_stream_still_detects_tar():
+_DOC1 = b"document one, long enough to span short reads. " * 4
+_DOC2 = b"document two, also longer than one short read. " * 4
+
+
+@pytest.mark.parametrize(
+    "build, expected",
+    [
+        pytest.param(
+            lambda: tar_archive({"m1.txt": b"member one", "m2.txt": b"member two"}),
+            [("m1.txt", b"member one"), ("m2.txt", b"member two")],
+            id="tar",
+        ),
+        pytest.param(
+            lambda: gzip_data(
+                tar_archive({"d.zip": zip_archive({"a.txt": _DOC1, "b.txt": _DOC2})})
+            ),
+            [("d.zip/a.txt", _DOC1), ("d.zip/b.txt", _DOC2)],
+            id="gzip_tar_of_zip",
+        ),
+        pytest.param(
+            lambda: tar_archive(
+                {
+                    "d.zip": _descriptor_zip(
+                        {"a.txt": _DOC1, "b.txt": _DOC2}, zipfile.ZIP_DEFLATED
+                    )
+                }
+            ),
+            [("d.zip/a.txt", _DOC1), ("d.zip/b.txt", _DOC2)],
+            id="tar_of_descriptor_zip",
+        ),
+    ],
+)
+def test_short_read_stream_still_detects_tar(build, expected):
     # tar magic sits at offset 257; a single short read must not make
-    # the sniffer misclassify the archive as an opaque leaf
-    data = tar_archive({"m1.txt": b"member one", "m2.txt": b"member two"})
+    # the sniffer misclassify the archive as an opaque leaf, nor land
+    # mid-header in a nested level's peek, exact read or pushback
+    data = build()
     rows = list(
         walk_stream("short.tar", _ShortReadStream(data), len(data))
     )
-    assert [(r.path, r.content) for r in rows] == [
-        ("m1.txt", b"member one"),
-        ("m2.txt", b"member two"),
-    ]
+    assert [(r.path, r.content) for r in rows] == expected
+    assert rows == list(walk_stream("short.tar", io.BytesIO(data), len(data)))
 
 
 def test_zip_inside_gzip_inside_tar():
